@@ -20,7 +20,7 @@ object GraftSession {
       // events.parquet carries TIMESTAMP(NANOS) which the vectorized reader
       // rejects; read as raw nanos longs (Tables.events converts back).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // typed Aggregators (MinHash/SimHash signatures) keep object buffers
+      // typed Aggregators (e.g. SimHash signatures) keep object buffers
       // in ObjectHashAggregate; the default 128-key fallback would push
       // every realistic cardinality to slow sort-based aggregation.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
@@ -36,27 +36,12 @@ object GraftSession {
       .config("spark.sql.maxMetadataStringLength", "1024")
 
   def create(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // one task thread per core: oversubscribing (local[32] on a few cores)
+    // measured slower, not faster
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    registerAggregates(spark)
     spark
-  }
-
-  /** SQL-surface registration of the typed sketch aggregators (Aggregator
-    * instances can't go through `SparkSessionExtensions.injectFunction`,
-    * which takes expression builders — `udaf` bridges them instead). Lets
-    * pure SQL run the full MinHash pipeline:
-    * {{{
-    * SELECT doc_id, graft_minhash_agg(sh) AS sig
-    * FROM corpus LATERAL VIEW graft_shingle_hashes(text, 5) t AS sh
-    * GROUP BY doc_id
-    * }}}
-    * Signature length is fixed at registration (k = 128, the library
-    * default); callers needing another k use the typed API. */
-  def registerAggregates(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.{functions => F, Encoders}
-    spark.udf.register("graft_minhash_agg",
-      F.udaf(new graft.functions.OnePermMinHashAgg(128), Encoders.scalaLong))
   }
 }

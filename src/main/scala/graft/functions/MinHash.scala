@@ -3,81 +3,12 @@ package graft.functions
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
-/** MinHash signature aggregator: folds a document's shingle hashes into a
-  * k-permutation MinHash signature (SURVEY.md §7.2; see
-  * [[OnePermMinHashAgg]] for the cheaper default variant).
-  *
-  * Each "permutation" i is the 64-bit finalizer-mix of `shingleHash ^ seed_i`
-  * (splitmix64 constants) — a standard stand-in for true random permutations.
-  * The buffer is a fixed k-long array of current minima: constant size per
-  * group, merged element-wise — unlike the reference's per-group ArrayList
-  * buffering (`CountTF.java:92-99`), this cannot OOM on a huge document, and
-  * partial aggregation pre-merges map-side so only k longs per (doc,partition)
-  * cross the shuffle.
-  */
-class MinHashAgg(k: Int) extends Aggregator[Long, Array[Long], Array[Long]] {
-  override def zero: Array[Long] = Array.fill(k)(Long.MaxValue)
-
-  override def reduce(buf: Array[Long], shingleHash: Long): Array[Long] = {
-    var i = 0
-    while (i < k) {
-      val h = MinHash.mix64(shingleHash ^ MinHash.seed(i))
-      if (h < buf(i)) buf(i) = h
-      i += 1
-    }
-    buf
-  }
-
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < k) { if (b(i) < a(i)) a(i) = b(i); i += 1 }
-    a
-  }
-
-  override def finish(buf: Array[Long]): Array[Long] = buf
-  override def bufferEncoder: Encoder[Array[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  override def outputEncoder: Encoder[Array[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-}
-
-/** One-permutation MinHash (OPH): instead of k independent permutations
-  * (k mixes per shingle — [[MinHashAgg]]), each shingle hash lands in ONE
-  * of k bins (`h mod k`) and the bin keeps the minimum mixed value — one
-  * mix per shingle, ~k× less CPU for the same signature length. Empty
-  * bins are densified at finish (deterministic forward-rotation copy), so
-  * two signatures still estimate Jaccard by component agreement. The
-  * standard trade: slightly higher estimator variance on documents with
-  * ≪ k shingles; identical inputs still produce identical signatures. */
-class OnePermMinHashAgg(k: Int) extends Aggregator[Long, Array[Long], Array[Long]] {
-  override def zero: Array[Long] = Array.fill(k)(Long.MaxValue)
-
-  override def reduce(buf: Array[Long], shingleHash: Long): Array[Long] = {
-    val v = MinHash.mix64(shingleHash)
-    val bin = java.lang.Long.remainderUnsigned(v, k.toLong).toInt
-    val mixed = MinHash.mix64(v ^ MinHash.OphSalt)
-    if (mixed < buf(bin)) buf(bin) = mixed
-    buf
-  }
-
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < k) { if (b(i) < a(i)) a(i) = b(i); i += 1 }
-    a
-  }
-
-  override def finish(buf: Array[Long]): Array[Long] = MinHash.densify(buf, k)
-
-  override def bufferEncoder: Encoder[Array[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  override def outputEncoder: Encoder[Array[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-}
-
 /** SimHash aggregator: folds (termHash, weight) pairs into a 64-bit SimHash.
   * Buffer = 64 signed accumulators; bit j of the result is set iff the
   * weighted sum of bit-j contributions is positive. Constant-size buffer,
-  * map-side partial aggregation — same scale posture as [[MinHashAgg]]. */
+  * map-side partial aggregation — this cannot OOM on a huge document,
+  * unlike the reference's per-group ArrayList buffering
+  * (`CountTF.java:92-99`). */
 class SimHashAgg extends Aggregator[(Long, Long), Array[Long], Long] {
   override def zero: Array[Long] = new Array[Long](64)
 
@@ -118,16 +49,15 @@ object MinHash {
     x ^ (x >>> 31)
   }
 
-  /** Deterministic per-permutation seed. */
+  /** Deterministic per-bin salt for [[densify]]'s borrowed values. */
   def seed(i: Int): Long = mix64(0x5DEECE66DL * (i + 1))
 
-  /** OPH bin update constant (shared by [[OnePermMinHashAgg]] and the
-    * per-row [[MinHashSignature]] expression — both must agree bit-for-bit). */
+  /** OPH bin update constant of the [[MinHashSignature]] expression. */
   val OphSalt = 0x6A09E667F3BCC909L
 
   /** OPH densification: fill each empty bin from the next non-empty bin
     * (rotating), salted by the bin index so borrowed values differ across
-    * bins. Shared by the aggregator finish and the per-row expression. */
+    * bins. */
   def densify(buf: Array[Long], k: Int): Array[Long] = {
     val out = new Array[Long](k)
     var i = 0

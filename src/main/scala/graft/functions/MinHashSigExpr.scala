@@ -7,18 +7,24 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Per-row one-permutation MinHash signature: `array<bigint>` of length `k`
-  * computed in ONE pass over the string's byte windows — the scalar twin of
-  * the [[ShingleHashes]] generator + [[OnePermMinHashAgg]] aggregate chain,
-  * producing bit-identical signatures (shared [[ShingleHashing.hashRange]],
-  * [[MinHash.OphSalt]], [[MinHash.densify]]; min() is duplicate-insensitive,
-  * so skipping the generator's distinct-set changes nothing).
+/** Per-row one-permutation MinHash (OPH) signature: `array<bigint>` of
+  * length `k` computed in ONE pass over the string's byte windows — the
+  * engine's only MinHash kernel. Each window's hash
+  * ([[ShingleHashing.hashRange]], the same function as the
+  * [[ShingleHashes]] generator) lands in ONE of k bins (`mix64(h) mod k`)
+  * and the bin keeps the minimum re-mixed value ([[MinHash.OphSalt]]):
+  * one mix per shingle instead of k permutations. Empty bins are filled
+  * by [[MinHash.densify]], so two signatures still estimate Jaccard by
+  * component agreement. min() is duplicate-insensitive, so repeated
+  * shingles need no distinct set.
   *
-  * Use the generator+aggregate chain when a huge document's shingles should
-  * parallelize across tasks (batch corpora); use this expression when the
-  * signature must be a per-row map — Structured Streaming (no shuffle, no
-  * state for signature building) and SQL one-liners
+  * A map, not an aggregate: no shuffle and no state, so the same
+  * expression serves the batch operators ([[graft.operators.Dedup]]),
+  * Structured Streaming ([[graft.streaming.Streams]]) and SQL
   * (`graft_minhash(text, 5, 128)`, registered by [[graft.GraftExtensions]]).
+  * A text with fewer than `n` bytes has no window and gets the
+  * all-`Long.MaxValue` signature; callers drop such texts first
+  * (`Dedup.minhashSigs`).
   */
 case class MinHashSignature(child: Expression, n: Int, k: Int)
     extends UnaryExpression with CodegenFallback {

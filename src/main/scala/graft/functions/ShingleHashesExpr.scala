@@ -87,7 +87,7 @@ case class ShingleHashes(child: Expression, n: Int)
 
 /** Shared byte-window hashing — the shingle hash function used by the
   * [[ShingleHashes]] generator and the per-row [[MinHashSignature]]
-  * expression (both must agree bit-for-bit for batch/stream parity). */
+  * expression. */
 object ShingleHashing {
   /** 64-bit hash of bytes[off, off+len): two murmur32 passes with distinct
     * seeds combined — deterministic, allocation-free. */

@@ -4,18 +4,19 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{MinHashAgg, OnePermMinHashAgg, SimHashAgg, TextFunctions}
+import graft.functions.{MinHashSignature, SimHashAgg, TextFunctions}
 
 /** Deduplication operators for a training-data pipeline, each designed
   * around one shuffle pattern that survives 100 TB:
   *
   *  - [[exact]]: hash-groupBy on a 128-bit content fingerprint — one
   *    shuffle keyed by digest, partial agg map-side. No full-text shuffle.
-  *  - [[minhashSignatures]] / [[minhashPairs]]: char-shingle → k-permutation
-  *    MinHash (custom [[graft.functions.MinHashAgg]]) → banded LSH → bucket
-  *    self-join. Only docs agreeing on a whole band meet in a bucket, so the
-  *    join is |bucket|² on near-dup clusters instead of |corpus|². Hot
-  *    buckets (boilerplate at corpus scale) are capped deterministically.
+  *  - [[minhashSignatures]] / [[minhashPairs]]: byte-shingle one-permutation
+  *    MinHash (per-row [[graft.functions.MinHashSignature]]) → banded LSH →
+  *    bucket self-join. Only docs agreeing on a whole band meet in a
+  *    bucket, so the join is |bucket|² on near-dup clusters instead of
+  *    |corpus|². Hot buckets (boilerplate at corpus scale) are capped
+  *    deterministically.
   *  - [[simhashSignatures]] / [[simhashPairs]]: 64-bit SimHash (custom
   *    [[graft.functions.SimHashAgg]]) with 16-bit-chunk LSH — by pigeonhole
   *    any pair within Hamming distance 3 agrees exactly on ≥1 of 4 chunks;
@@ -35,40 +36,46 @@ object Dedup {
       .agg(count(lit(1)).as("n_docs"), min("doc_id").as("keeper"))
       .orderBy("fingerprint")
 
-  /** Distinct 64-bit-hashed character `n`-shingles of the canonicalized
-    * text: one row per (doc_id, shingle_hash). Set semantics come from the
-    * custom [[graft.functions.ShingleHashes]] generator, which hashes each
-    * shingle window in place and dedups through a primitive hash set —
-    * per-row map work, no substring array materialization, and no
-    * corpus-wide distinct shuffle; the only exchange downstream is the
-    * k-long signature per doc (partial agg). */
-  def shingles(docs: DataFrame, n: Int = 5): DataFrame = {
+  /** Canonicalize `text` (lower-case, whitespace runs to one space,
+    * trim), drop texts shorter than one shingle, and sign the rest with the
+    * per-row [[MinHashSignature]] kernel: the `keep` columns plus
+    * `sig array<bigint>` of length `k`. The one spelling of "canonicalize,
+    * drop, sign" for the batch operators and the near-dup streams. Dropping
+    * matters: a sub-shingle text has no window and would get the
+    * all-`Long.MaxValue` signature, so all such texts would pair at
+    * Jaccard 1.0 in every band. */
+  private[graft] def minhashSigs(docs: DataFrame, k: Int, shingleLen: Int,
+      keep: Seq[String] = Seq("doc_id")): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge
     val canon = trim(regexp_replace(lower(col("text")), "\\s+", " "))
-    Scaling.fanOut(docs.select(col("doc_id"), col("text")))
-      .select(col("doc_id"), canon.as("canon"))
-      .where(length(col("canon")) >= n)
-      .select(col("doc_id"),
-        GraftColumnBridge.column(graft.functions.ShingleHashes(
-          GraftColumnBridge.expression(col("canon")), n)).as("shingle_hash"))
+    docs.select(keep.map(col) :+ canon.as("canon"): _*)
+      .where(length(col("canon")) >= shingleLen)
+      .select(keep.map(col) :+ GraftColumnBridge.column(MinHashSignature(
+        GraftColumnBridge.expression(col("canon")), shingleLen, k)).as("sig"): _*)
   }
 
-  /** MinHash signatures: one `array<bigint>` of length `k` per document.
-    * Default is one-permutation hashing (one mix per shingle, ~k× cheaper
-    * than k independent permutations at equal signature length); pass
-    * `onePerm = false` for the classic k-permutation aggregator when
-    * minimum estimator variance on very short documents matters. */
-  def minhashSignatures(docs: DataFrame, k: Int = 128, shingleLen: Int = 5,
-      onePerm: Boolean = true): DataFrame = {
-    val agg = if (onePerm) udaf(new OnePermMinHashAgg(k)) else udaf(new MinHashAgg(k))
-    shingles(docs, shingleLen)
-      .groupBy("doc_id")
-      .agg(agg(col("shingle_hash")).as("sig"))
+  /** LSH band keys of the `sig` column: a `posexplode` of one xxhash64 per
+    * band of `k / bands` consecutive signature components, to alias as
+    * (band, band_hash). Two documents share a bucket iff they agree on a
+    * whole band. */
+  private[graft] def bandHashes(k: Int, bands: Int): Column = {
+    require(k % bands == 0, "bands must divide k")
+    val r = k / bands
+    posexplode(expr(
+      s"transform(sequence(0, ${bands - 1}), b -> xxhash64(slice(sig, b * $r + 1, $r)))"))
   }
+
+  /** MinHash signatures: one `(doc_id, sig array<bigint>)` row of length
+    * `k` per document with at least `shingleLen` canonical characters — a
+    * per-row map after [[Scaling.fanOut]] (no generator, no aggregate).
+    * Input contract: one row per `doc_id`; repeated ids are not merged and
+    * come out as repeated signature rows. */
+  def minhashSignatures(docs: DataFrame, k: Int = 128, shingleLen: Int = 5): DataFrame =
+    minhashSigs(Scaling.fanOut(docs.select(col("doc_id"), col("text"))), k, shingleLen)
 
   /** LSH banding PLANNER: the S-curve table an engineer reads before
     * picking (bands, rows) for [[minhashPairs]] — for every banding of a
-    * `k`-permutation signature and every Jaccard value on a grid, the
+    * `k`-component signature and every Jaccard value on a grid, the
     * probability that a pair at that similarity collides in at least one
     * band, {{{ P(collide) = 1 - (1 - J^r)^b }}}, plus the banding's
     * threshold (the S-curve's steep point, `(1/b)^(1/r)`). Driver-less
@@ -95,7 +102,8 @@ object Dedup {
 
   /** Banded LSH over MinHash signatures → candidate pairs with estimated
     * Jaccard ≥ `threshold`. `bands` must divide `k`; with k=128, b=16
-    * (r=8) the LSH S-curve crosses ~0.5 at J≈(1/16)^(1/8)≈0.71. */
+    * (r=8) the LSH S-curve crosses ~0.5 at J≈(1/16)^(1/8)≈0.71. Input
+    * contract as [[minhashSignatures]]: one row per `doc_id`. */
   def minhashPairs(
       docs: DataFrame,
       k: Int = 128,
@@ -103,8 +111,7 @@ object Dedup {
       threshold: Double = 0.7,
       shingleLen: Int = 5,
       maxBucket: Int = 64): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
-    val r = k / bands
+    val bandKeys = bandHashes(k, bands)
     // materialize signatures once (3 consumers: banding + both join sides)
     // — at cluster scale this is "write the signature table, then join",
     // the standard LSH shape.
@@ -115,10 +122,7 @@ object Dedup {
     // (id, band, hash) rows — the 1 KB signature arrays only rejoin after
     // the candidate set is deduplicated, so no wide payload ever passes
     // through the window or the dedup exchange.
-    val banded = sigs.select(col("doc_id"),
-      posexplode(expr(
-        s"transform(sequence(0, ${bands - 1}), b -> xxhash64(slice(sig, b * $r + 1, $r)))"))
-        .as(Seq("band", "band_hash")))
+    val banded = sigs.select(col("doc_id"), bandKeys.as(Seq("band", "band_hash")))
     val capped = banded
       .withColumn("rn", row_number().over(
         Window.partitionBy("band", "band_hash").orderBy("doc_id")))
@@ -672,8 +676,8 @@ object Dedup {
     * hard-bounds adversarial inputs.
     *
     * BROADCAST-SIZED graphs finish locally: when the deduplicated edge set
-    * is at most `spark.graft.cc.localEdgeThreshold` rows (default 1M —
-    * two longs per row, the same order as a broadcast-join build side),
+    * is at most `localEdgeThreshold` rows (1M — two longs per row, the
+    * same order as a broadcast-join build side),
     * the edges are collected once and a driver union-find produces the
     * identical min-reachable labels, replacing ~log(n) contraction rounds
     * of tiny synchronized jobs with ONE collect (measured: the manifest
@@ -684,7 +688,13 @@ object Dedup {
     * Equality with the contraction loop is spec-pinned (DedupSpec); above
     * the threshold the loop below runs unchanged, so the switch is
     * data-sized, not tuned to any core count. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame =
+    connectedComponents(pairs, maxIter, localEdgeThreshold = 1000000L)
+
+  /** [[connectedComponents]] with the local union-find's edge limit as a
+    * parameter; 0 forces the distributed contraction loop (specs). */
+  private[graft] def connectedComponents(pairs: DataFrame, maxIter: Int,
+      localEdgeThreshold: Long): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // nodes come from the RAW pairs: a document appearing only in a
     // self-pair (doc_a == doc_b) still belongs in the output, labeling
@@ -737,11 +747,9 @@ object Dedup {
     // round's synchronized job pair, and no count barrier follows — the
     // caller's own action materializes the cheap broadcast-join labels.
     // Larger graphs fall through to the loop unchanged.
-    val localMax = pairs.sparkSession.conf
-      .get("spark.graft.cc.localEdgeThreshold", "1000000").toLong
-    val localCap = math.min(localMax, Int.MaxValue - 2L).toInt
+    val localCap = math.min(localEdgeThreshold, Int.MaxValue - 2L).toInt
     val localEdges =
-      if (localMax <= 0) null
+      if (localEdgeThreshold <= 0) null
       else init.select(col("u"), col("v")).limit(localCap + 1).collect()
     if (localEdges != null && localEdges.length <= localCap) {
       val spark = pairs.sparkSession

@@ -180,7 +180,13 @@ object QualityClassifier {
     * THROW gate: the decimal-summed mean log-loss of the trained model must
     * beat the zero-init loss (ln 2) — a silently diverged fit (bad lr)
     * fails the build instead of shipping a worse-than-chance scorer. */
-  def fit(feats: DataFrame, iters: Int = DefaultIters, lr: Double = DefaultLr): Model = {
+  def fit(feats: DataFrame, iters: Int = DefaultIters, lr: Double = DefaultLr): Model =
+    fit(feats, iters, lr, localRowThreshold = 500000L)
+
+  /** [[fit]] with the driver-local loop's row limit as a parameter; 0
+    * forces the distributed gradient loop (specs). */
+  private[graft] def fit(feats: DataFrame, iters: Int, lr: Double,
+      localRowThreshold: Long): Model = {
     // training set = rows with every feature defined: degenerate documents
     // (zero chars / zero tokens → NULL ratio features, see [[featureFrame]])
     // would otherwise skew mu/sigma (null-skipping sums over an all-row
@@ -193,7 +199,7 @@ object QualityClassifier {
     val nD = n.toDouble
     // BROADCAST-SIZED training sets iterate on the driver: fitStats just
     // counted the trainable rows, and when n × 9 doubles is collect-sized
-    // (`spark.graft.fit.localRowThreshold`, default 500k rows ≈ 40 MB)
+    // (`localRowThreshold`, 500k rows ≈ 40 MB)
     // the 30-iteration loop costs ONE collect instead of 30+1 tiny
     // synchronized aggregate jobs — the loop was pure job latency at any
     // n this small (measured: each iteration ~60-120 ms of scheduling for
@@ -204,9 +210,7 @@ object QualityClassifier {
     // — spec-pinned, and the layout gate + DuckDB oracle both replay it.
     // Corpus-sized training sets (the 100 TB posture) keep the
     // distributed loop below.
-    val localMax = feats.sparkSession.conf
-      .get("spark.graft.fit.localRowThreshold", "500000").toLong
-    if (n <= localMax) return fitLocal(trainable, mu, sigma, n, iters, lr)
+    if (n <= localRowThreshold) return fitLocal(trainable, mu, sigma, n, iters, lr)
     val zf = trainable.select((col("y") +: zCols(mu, sigma)): _*).scopedPersist()
     zf.count() // pin: 30 iterations re-read this frame, never the corpus
     try {

@@ -629,9 +629,10 @@ object Streams {
   case class DocBandSig(doc_id: Long, sig: Array[Long], band: Int, band_hash: Long)
   case class NearDupHit(doc_id: Long, dup_of: Long, band: Int, jaccard_est: Double)
 
-  /** Streaming MinHash near-dup detection: per-row OPH signatures (the
-    * `graft_minhash` scalar — no shuffle, no state to BUILD a signature),
-    * banded, then a stateful signature store keyed by (band, band_hash).
+  /** Streaming MinHash near-dup detection: per-row OPH signatures
+    * ([[graft.operators.Dedup.minhashSigs]] — no shuffle, no state to BUILD
+    * a signature; sub-shingle texts are dropped, never paired), banded,
+    * then a stateful signature store keyed by (band, band_hash).
     * Each arriving document is compared against the signatures already in
     * its bucket; estimated Jaccard ≥ `threshold` emits a hit against the
     * earlier document.
@@ -661,15 +662,10 @@ object Streams {
       threshold: Double = 0.7,
       maxBucket: Int = 64,
       idleTimeout: String = "1 hour"): Dataset[NearDupHit] = {
-    require(k % bands == 0, "bands must divide k")
-    val r = k / bands
     import docs.sparkSession.implicits._
-    val sigs = docs
-      .selectExpr("doc_id",
-        s"graft_minhash(trim(regexp_replace(lower(text), '\\\\s+', ' ')), $shingleLen, $k) AS sig")
-      .select(col("doc_id"), col("sig"), posexplode(expr(
-        s"transform(sequence(0, ${bands - 1}), b -> xxhash64(slice(sig, b * $r + 1, $r)))"))
-        .as(Seq("band", "band_hash")))
+    val sigs = Dedup.minhashSigs(docs, k, shingleLen)
+      .select(col("doc_id"), col("sig"),
+        Dedup.bandHashes(k, bands).as(Seq("band", "band_hash")))
       .as[DocBandSig]
     sigs
       .groupByKey(s => (s.band, s.band_hash))
@@ -725,17 +721,11 @@ object Streams {
       bands: Int = 8,
       threshold: Double = 0.7,
       maxBucket: Int = 64): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
-    val r = k / bands
+    val bandKeys = Dedup.bandHashes(k, bands)
     // signatures feed the banding and both est-side rejoins — persist or
     // Catalyst recomputes the per-row MinHash scan three times
-    val sigs = docs
-      .selectExpr("doc_id",
-        s"graft_minhash(trim(regexp_replace(lower(text), '\\\\s+', ' ')), $shingleLen, $k) AS sig")
-      .scopedPersist()
-    val banded = sigs.select(col("doc_id"), posexplode(expr(
-        s"transform(sequence(0, ${bands - 1}), b -> xxhash64(slice(sig, b * $r + 1, $r)))"))
-        .as(Seq("band", "band_hash")))
+    val sigs = Dedup.minhashSigs(docs, k, shingleLen).scopedPersist()
+    val banded = sigs.select(col("doc_id"), bandKeys.as(Seq("band", "band_hash")))
     val stored = banded
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window
@@ -783,16 +773,12 @@ object Streams {
       threshold: Double = 0.7,
       watermarkDelay: String = "10 minutes",
       horizon: String = "1 hour"): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
-    val r = k / bands
-    def side(suffix: String): DataFrame = docs
-      .selectExpr("doc_id", "ts",
-        s"graft_minhash(trim(regexp_replace(lower(text), '\\\\s+', ' ')), $shingleLen, $k) AS sig")
-      .select(col("doc_id").as(s"doc_$suffix"), col("ts").as(s"ts_$suffix"),
-        col("sig").as(s"sig_$suffix"), posexplode(expr(
-          s"transform(sequence(0, ${bands - 1}), b -> xxhash64(slice(sig, b * $r + 1, $r)))"))
-          .as(Seq(s"band_$suffix", s"hash_$suffix")))
-      .withWatermark(s"ts_$suffix", watermarkDelay)
+    val bandKeys = Dedup.bandHashes(k, bands)
+    def side(suffix: String): DataFrame =
+      Dedup.minhashSigs(docs, k, shingleLen, Seq("doc_id", "ts"))
+        .select(col("doc_id").as(s"doc_$suffix"), col("ts").as(s"ts_$suffix"),
+          col("sig").as(s"sig_$suffix"), bandKeys.as(Seq(s"band_$suffix", s"hash_$suffix")))
+        .withWatermark(s"ts_$suffix", watermarkDelay)
     side("a").join(side("b"),
         col("band_a") === col("band_b") && col("hash_a") === col("hash_b") &&
           col("doc_a") < col("doc_b") &&
@@ -825,16 +811,11 @@ object Streams {
       maxBucket: Int = 64,
       watermarkDelay: String = "10 minutes",
       stateHorizon: String = "1 hour"): Dataset[NearDupHit] = {
-    require(k % bands == 0, "bands must divide k")
-    val r = k / bands
     import docs.sparkSession.implicits._
-    val sigs = docs
-      .withWatermark("ts", watermarkDelay)
-      .selectExpr("doc_id", "ts",
-        s"graft_minhash(trim(regexp_replace(lower(text), '\\\\s+', ' ')), $shingleLen, $k) AS sig")
-      .select(col("doc_id"), col("sig"), posexplode(expr(
-        s"transform(sequence(0, ${bands - 1}), b -> xxhash64(slice(sig, b * $r + 1, $r)))"))
-        .as(Seq("band", "band_hash")), col("ts"))
+    val sigs = Dedup.minhashSigs(docs.withWatermark("ts", watermarkDelay), k, shingleLen,
+        Seq("doc_id", "ts"))
+      .select(col("doc_id"), col("sig"),
+        Dedup.bandHashes(k, bands).as(Seq("band", "band_hash")), col("ts"))
       .as[DocBandSigTs]
     sigs
       .groupByKey(s => (s.band, s.band_hash))

@@ -199,11 +199,9 @@ class DedupSpec extends SparkSpec {
     // threshold 0 forces the DISTRIBUTED loop — the local union-find
     // would otherwise absorb this graph and retire the convergence pin
     val pairs = (1L until 64L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    spark.conf.set("spark.graft.cc.localEdgeThreshold", "0")
-    try {
-      val got = Dedup.connectedComponents(pairs, maxIter = 8).as[(Long, Long)].collect()
-      assert(got.length == 64 && got.forall(_._2 == 1L))
-    } finally spark.conf.unset("spark.graft.cc.localEdgeThreshold")
+    val got = Dedup.connectedComponents(pairs, maxIter = 8, localEdgeThreshold = 0L)
+      .as[(Long, Long)].collect()
+    assert(got.length == 64 && got.forall(_._2 == 1L))
   }
 
   test("connectedComponents: local union-find equals the contraction loop") {
@@ -217,12 +215,10 @@ class DedupSpec extends SparkSpec {
       Seq((200L, 200L), (150L, 90L))
     val pairs = edges.toDF("doc_a", "doc_b")
     val local = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
-    spark.conf.set("spark.graft.cc.localEdgeThreshold", "0")
-    try {
-      val dist = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
-      assert(local == dist)
-      assert(local(200L) == 200L)
-    } finally spark.conf.unset("spark.graft.cc.localEdgeThreshold")
+    val dist = Dedup.connectedComponents(pairs, maxIter = 20, localEdgeThreshold = 0L)
+      .as[(Long, Long)].collect().toMap
+    assert(local == dist)
+    assert(local(200L) == 200L)
   }
 
   test("applyNearDedup keeps the cluster minimum and all unpaired docs") {
@@ -293,21 +289,21 @@ class DedupSpec extends SparkSpec {
     assert(got.forall(_._2 == 1L))
   }
 
+  /** The distinct shingle hashes of one canonicalized text, through the
+    * SQL generator `graft_shingle_hashes`. */
+  private def shingleHashes(text: String, n: Int = 5): Seq[Long] =
+    Seq(text).toDF("text")
+      .selectExpr(s"graft_shingle_hashes(trim(regexp_replace(lower(text), '\\\\s+', ' ')), $n)")
+      .as[Long].collect().toSeq
+
   test("shingles are distinct per doc and length-bounded") {
-    val sh = Dedup.shingles(Seq((1L, "abcdefg")).toDF("doc_id", "text"), n = 5)
-    assert(sh.count() == 3) // abcde, bcdef, cdefg
+    assert(shingleHashes("abcdefg").size == 3) // abcde, bcdef, cdefg
   }
 
-  test("one-permutation and k-permutation MinHash find the same near-dup pairs") {
-    def pairs(onePerm: Boolean) = {
-      val sigs = Dedup.minhashSignatures(corpus, onePerm = onePerm)
-      sigs // force distinct plans per variant
-      Dedup.minhashPairs(corpus, threshold = 0.5)
-        .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    }
-    // default (OPH) pairs must include the known dups found by either variant
-    val oph = pairs(onePerm = true)
-    assert(oph.contains((1L, 2L)) && oph.contains((1L, 4L)) && oph.contains((2L, 4L)))
+  test("minhash LSH pairs every planted near-dup of the corpus at threshold 0.5") {
+    val pairs = Dedup.minhashPairs(corpus, threshold = 0.5)
+      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    assert(pairs.contains((1L, 2L)) && pairs.contains((1L, 4L)) && pairs.contains((2L, 4L)))
   }
 
   test("crossSourceDupMatrix normalizes source order and decimal-averages jaccard") {
@@ -386,13 +382,11 @@ class DedupSpec extends SparkSpec {
   }
 
   test("shingle generator: dedups repeats, empty below window size") {
-    assert(Dedup.shingles(Seq((1L, "aaaaaaaa")).toDF("doc_id", "text"), n = 5).count() == 1)
-    assert(Dedup.shingles(Seq((1L, "abc")).toDF("doc_id", "text"), n = 5).count() == 0)
+    assert(shingleHashes("aaaaaaaa").size == 1)
+    assert(shingleHashes("abc").isEmpty)
     // identical canonical text → identical shingle-hash sets
-    val a = Dedup.shingles(Seq((1L, "The Quick  Brown")).toDF("doc_id", "text"))
-      .select("shingle_hash").as[Long].collect().toSet
-    val b = Dedup.shingles(Seq((2L, "the quick brown")).toDF("doc_id", "text"))
-      .select("shingle_hash").as[Long].collect().toSet
+    val a = shingleHashes("The Quick  Brown").toSet
+    val b = shingleHashes("the quick brown").toSet
     assert(a == b && a.nonEmpty)
   }
 

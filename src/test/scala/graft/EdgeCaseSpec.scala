@@ -136,18 +136,4 @@ class EdgeCaseSpec extends SparkSpec {
     assert(HeaderCodecs.compressedRaster(broken).isEmpty)
     assert(PixelCodecs.rgbRaster(Array[Byte](1, 2, 3)).isEmpty)
   }
-
-  test("streaming near-dup store: sub-shingle docs share the all-empty signature") {
-    // docs shorter than the shingle window get the all-MaxValue densified
-    // signature → they band-collide with each OTHER (semantically: two
-    // empty-content docs are duplicates) but never with real docs; the
-    // per-bucket cap bounds the degenerate bucket
-    val docs = Seq((1L, "ab"), (2L, "cd"),
-      (3L, "a real document with plenty of shingled content here"))
-      .toDF("doc_id", "text")
-    val hits = graft.streaming.Streams.streamingNearDups(docs, threshold = 0.5)
-      .select("doc_id", "dup_of").as[(Long, Long)].collect().toSet
-    assert(hits.contains((2L, 1L)))
-    assert(!hits.exists(h => h._1 == 3L || h._2 == 3L))
-  }
 }

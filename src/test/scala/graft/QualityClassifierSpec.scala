@@ -109,10 +109,8 @@ class QualityClassifierSpec extends SparkSpec {
     // threshold takes the driver-local path — same Model, every field
     val docs = corpus()
     val local = QualityClassifier.fit(QualityClassifier.featureFrame(docs))
-    spark.conf.set("spark.graft.fit.localRowThreshold", "0")
-    val dist =
-      try QualityClassifier.fit(QualityClassifier.featureFrame(docs))
-      finally spark.conf.unset("spark.graft.fit.localRowThreshold")
+    val dist = QualityClassifier.fit(QualityClassifier.featureFrame(docs),
+      QualityClassifier.DefaultIters, QualityClassifier.DefaultLr, localRowThreshold = 0L)
     assert(local.intercept == dist.intercept)
     assert(local.weights.toSeq == dist.weights.toSeq)
     assert(local.mu.toSeq == dist.mu.toSeq)

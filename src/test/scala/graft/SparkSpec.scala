@@ -13,7 +13,6 @@ object SparkSpec {
   lazy val session: SparkSession = {
     val s = GraftSession.builder("4").appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    GraftSession.registerAggregates(s)
     s
   }
 }

@@ -547,6 +547,41 @@ class StreamingSpec extends SparkSpec {
     assert(uncapped.contains((4L, 3L)))
   }
 
+  test("near-dup operators never pair texts shorter than one shingle") {
+    // after canonicalization "ab", "  " and "xyz" have no 5-byte window;
+    // signing them would give all three the same all-empty signature and
+    // pair them at Jaccard 1.0 in every band
+    val sentence = "the quick brown fox jumps over the lazy dog and keeps jumping"
+    val texts = Seq((1L, "ab"), (2L, "  "), (3L, "xyz"), (4L, sentence))
+    val docs = texts.toDF("doc_id", "text")
+    val timed = texts.map { case (id, t) => (id, ts(id.toInt), t) }.toDF("doc_id", "ts", "text")
+    val short = Set(1L, 2L, 3L)
+    def touchesShort(a: Long, b: Long) = short(a) || short(b)
+    val batch = Streams.nearDupsBatch(docs, threshold = 0.5)
+      .select("doc_id", "dup_of").as[(Long, Long)].collect()
+    assert(!batch.exists((touchesShort _).tupled), batch.toSeq)
+    val store = Streams.streamingNearDups(docs, threshold = 0.5)
+      .collect().map(h => (h.doc_id, h.dup_of))
+    assert(!store.exists((touchesShort _).tupled), store.toSeq)
+    val joined = Streams.nearDupPairsJoin(timed, threshold = 0.5)
+      .select("doc_a", "doc_b").as[(Long, Long)].collect()
+    assert(!joined.exists((touchesShort _).tupled), joined.toSeq)
+    // the event-time store needs a watermark, so it runs as a stream
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[(Long, Timestamp, String)]
+    val q = Streams.streamingNearDupsEventTime(in.toDF.toDF("doc_id", "ts", "text"),
+        threshold = 0.5, watermarkDelay = "0 seconds")
+      .writeStream.format("memory").queryName("short_docs_out")
+      .outputMode("append").start()
+    try {
+      in.addData(texts.map { case (id, t) => (id, ts(id.toInt), t) })
+      q.processAllAvailable()
+      val eventTime = spark.table("short_docs_out")
+        .select("doc_id", "dup_of").as[(Long, Long)].collect()
+      assert(!eventTime.exists((touchesShort _).tupled), eventTime.toSeq)
+    } finally q.stop()
+  }
+
   test("stream-stream near-dup self-join pairs in-corridor docs, excludes out-of-horizon") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Timestamp, String)]
@@ -656,17 +691,20 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("per-row graft_minhash matches the batch generator+aggregator signature") {
+    // batch spelling: the shingle generator fans each doc out to one row per
+    // shingle, grouped and folded by the reference aggregator
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "pack my box with five dozen liquor jugs")).toDF("doc_id", "text")
-    val viaAgg = graft.operators.Dedup.minhashSignatures(docs, k = 32)
-      .as[(Long, Array[Long])].collect().toMap
-    val viaExpr = docs.selectExpr("doc_id",
-      "graft_minhash(trim(regexp_replace(lower(text), '\\\\s+', ' ')), 5, 32) AS sig")
-      .as[(Long, Array[Long])].collect().toMap
-    viaAgg.foreach { case (id, sig) =>
-      assert(viaExpr(id).toSeq == sig.toSeq, s"signature mismatch for doc $id")
-    }
+      .selectExpr("doc_id", "trim(regexp_replace(lower(text), '\\\\s+', ' ')) AS canon")
+    val ophAgg = udaf(new OphReference.Agg(32))
+    val viaAgg = docs.selectExpr("doc_id", "graft_shingle_hashes(canon, 5) AS sh")
+      .groupBy("doc_id").agg(ophAgg($"sh").as("sig"))
+      .as[(Long, Array[Long])].collect().map { case (id, sig) => id -> sig.toSeq }.toMap
+    val viaExpr = docs.selectExpr("doc_id", "graft_minhash(canon, 5, 32) AS sig")
+      .as[(Long, Array[Long])].collect().map { case (id, sig) => id -> sig.toSeq }.toMap
+    assert(viaAgg.keySet == Set(1L, 2L))
+    assert(viaExpr == viaAgg)
   }
 
   test("streamingSpanDedup (batch mode): later occurrences point at corpus-first") {
