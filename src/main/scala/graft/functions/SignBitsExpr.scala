@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * executor compiled it again).
   *
   * Output is `array<int>` of 0/1 so downstream banding
-  * (`xxhash64(slice(bits, ...))`) is unchanged.
+  * (`Lsh.bandKeys`) reads it as any other signature array.
   */
 case class SignBits(child: Expression, planes: Int)
     extends UnaryExpression with CodegenFallback {

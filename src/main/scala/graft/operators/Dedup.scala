@@ -12,15 +12,16 @@ import graft.functions.{MinHashSignature, SimHashAgg, TextFunctions}
   *  - [[exact]]: hash-groupBy on a 128-bit content fingerprint — one
   *    shuffle keyed by digest, partial agg map-side. No full-text shuffle.
   *  - [[minhashSignatures]] / [[minhashPairs]]: byte-shingle one-permutation
-  *    MinHash (per-row [[graft.functions.MinHashSignature]]) → banded LSH →
-  *    bucket self-join. Only docs agreeing on a whole band meet in a
+  *    MinHash (per-row [[graft.functions.MinHashSignature]]) → banded LSH
+  *    candidates from [[Lsh]] (band keys, deterministic bucket cap, narrow
+  *    bucket self-join). Only docs agreeing on a whole band meet in a
   *    bucket, so the join is |bucket|² on near-dup clusters instead of
-  *    |corpus|². Hot buckets (boilerplate at corpus scale) are capped
-  *    deterministically.
+  *    |corpus|², and hot buckets (boilerplate at corpus scale) are capped.
   *  - [[simhashSignatures]] / [[simhashPairs]]: 64-bit SimHash (custom
-  *    [[graft.functions.SimHashAgg]]) with 16-bit-chunk LSH — by pigeonhole
-  *    any pair within Hamming distance 3 agrees exactly on ≥1 of 4 chunks;
-  *    verify with `bit_count(a XOR b)`.
+  *    [[graft.functions.SimHashAgg]]) with 16-bit-chunk LSH through the
+  *    same uncapped [[Lsh.bucketPairs]] — by pigeonhole any pair within
+  *    Hamming distance 3 agrees exactly on ≥1 of 4 chunks; verify with
+  *    `bit_count(a XOR b)`.
   *  - [[ngramJaccardExact]]: exact token-3-gram Jaccard via shared-gram
   *    join — the exact verifier behind the sketches, output-bound (only
   *    overlapping pairs materialize).
@@ -52,17 +53,6 @@ object Dedup {
       .where(length(col("canon")) >= shingleLen)
       .select(keep.map(col) :+ GraftColumnBridge.column(MinHashSignature(
         GraftColumnBridge.expression(col("canon")), shingleLen, k)).as("sig"): _*)
-  }
-
-  /** LSH band keys of the `sig` column: a `posexplode` of one xxhash64 per
-    * band of `k / bands` consecutive signature components, to alias as
-    * (band, band_hash). Two documents share a bucket iff they agree on a
-    * whole band. */
-  private[graft] def bandHashes(k: Int, bands: Int): Column = {
-    require(k % bands == 0, "bands must divide k")
-    val r = k / bands
-    posexplode(expr(
-      s"transform(sequence(0, ${bands - 1}), b -> xxhash64(slice(sig, b * $r + 1, $r)))"))
   }
 
   /** MinHash signatures: one `(doc_id, sig array<bigint>)` row of length
@@ -111,30 +101,13 @@ object Dedup {
       threshold: Double = 0.7,
       shingleLen: Int = 5,
       maxBucket: Int = 64): DataFrame = {
-    val bandKeys = bandHashes(k, bands)
+    val bandKeys = Lsh.bandKeys("sig", k, bands)
     // materialize signatures once (3 consumers: banding + both join sides)
     // — at cluster scale this is "write the signature table, then join",
     // the standard LSH shape.
     val sigs = minhashSignatures(docs, k, shingleLen)
       .scopedPersist()
-
-    // banding, bucket cap, self-join, and pair-dedup all operate on NARROW
-    // (id, band, hash) rows — the 1 KB signature arrays only rejoin after
-    // the candidate set is deduplicated, so no wide payload ever passes
-    // through the window or the dedup exchange.
-    val banded = sigs.select(col("doc_id"), bandKeys.as(Seq("band", "band_hash")))
-    val capped = banded
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("band", "band_hash").orderBy("doc_id")))
-      .where(col("rn") <= maxBucket)
-      .drop("rn")
-    val cand = capped.select(col("band"), col("band_hash"), col("doc_id").as("doc_a"))
-      .join(capped.select(col("band"), col("band_hash"), col("doc_id").as("doc_b")),
-        Seq("band", "band_hash"))
-      .where(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-      .dropDuplicates("doc_a", "doc_b")
-    cand
+    Lsh.bucketPairs(sigs.select(col("doc_id"), bandKeys), "doc_id", Some(maxBucket))
       .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
       .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
       .withColumn("jaccard_est", expr("graft_sig_match(sig_a, sig_b)"))
@@ -154,25 +127,21 @@ object Dedup {
   }
 
   /** SimHash near-dup pairs within `maxHamming` (≤3 for the 4×16-bit chunk
-    * LSH to be lossless by pigeonhole). */
+    * LSH to be lossless by pigeonhole). The chunk index and value are the
+    * (band, band_hash) keys of [[Lsh.bucketPairs]], uncapped: the pigeonhole
+    * guarantee needs every pair of every bucket. */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3, "4-chunk LSH is only complete for distance <= 3")
-    val sigs = simhashSignatures(docs)
-    val chunked = sigs.select(col("doc_id"), col("simhash"),
-      posexplode(expr(
-        "transform(sequence(0, 3), c -> (simhash >> (c * 16)) & 65535)"))
-        .as(Seq("chunk", "chunk_val")))
-      .scopedPersist()
-    val a = chunked.select(col("chunk"), col("chunk_val"),
-      col("doc_id").as("doc_a"), col("simhash").as("sig_a"))
-    val b = chunked.select(col("chunk"), col("chunk_val"),
-      col("doc_id").as("doc_b"), col("simhash").as("sig_b"))
-    a.join(b, Seq("chunk", "chunk_val"))
-      .where(col("doc_a") < col("doc_b"))
+    val sigs = simhashSignatures(docs).scopedPersist()
+    val chunked = sigs.select(col("doc_id"), posexplode(expr(
+      "transform(sequence(0, 3), c -> (simhash >> (c * 16)) & 65535)"))
+      .as(Seq("band", "band_hash")))
+    Lsh.bucketPairs(chunked, "doc_id", None)
+      .join(sigs.select(col("doc_id").as("doc_a"), col("simhash").as("sig_a")), "doc_a")
+      .join(sigs.select(col("doc_id").as("doc_b"), col("simhash").as("sig_b")), "doc_b")
       .withColumn("hamming", expr("bit_count(sig_a ^ sig_b)"))
       .where(col("hamming") <= maxHamming)
       .select("doc_a", "doc_b", "hamming")
-      .dropDuplicates("doc_a", "doc_b")
       .orderBy("doc_a", "doc_b")
   }
 

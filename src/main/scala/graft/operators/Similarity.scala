@@ -335,42 +335,35 @@ object Similarity {
     perQuery
   }
 
-  /** All-pairs near-dup by cosine: LSH-bucket self-join (two vectors are
-    * candidates iff they share a full band of sign bits), exact cosine on
-    * candidates, threshold filter before the pair dedup. */
+  /** All-pairs near-dup by cosine: sign-random-projection band keys, then
+    * [[Lsh.bucketPairs]] (two vectors are candidates iff they share a full
+    * band of sign bits; each bucket keeps its `maxBucket` lowest ids, so a
+    * mass-duplicated vector cluster cannot make one bucket |bucket|² —
+    * run exact dedup first if whole duplicate clusters must be recovered).
+    * The vectors rejoin the distinct candidate pairs for the exact
+    * cosine. */
   def cosinePairsLsh(
       embeddings: DataFrame,
       threshold: Double,
       planes: Int = 16,
       bands: Int = 4,
       maxBucket: Int = 256): DataFrame = {
-    require(planes % bands == 0)
-    val r = planes / bands
-    val banded = prepared(embeddings, "embedding")
-      .withColumn("bits", expr(s"graft_sign_bits(v, $planes)"))
-      .select(col("vec_id"), col("v"), col("norm"),
-        posexplode(expr(
-          s"transform(sequence(0, ${bands - 1}), b -> xxhash64(slice(bits, b * $r + 1, $r)))"))
-          .as(Seq("band", "band_hash")))
-      // cap pathological buckets (mass-duplicated vectors put whole clusters
-      // in one bucket → |bucket|² self-join); deterministic keep-lowest-ids.
-      // Run exact dedup first if full duplicate clusters must be recovered.
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("band", "band_hash").orderBy("vec_id")))
-      .where(col("rn") <= maxBucket)
-      .drop("rn")
+    val bandKeys = Lsh.bandKeys("bits", planes, bands)
+    // vectors feed the banding and both rejoins: persist once instead of
+    // recomputing the cast and the norm three times
+    val e = prepared(embeddings, "embedding").select("vec_id", "v", "norm")
       .scopedPersist()
-    val a = banded.select(col("band"), col("band_hash"),
-      col("vec_id").as("vec_a"), col("v").as("va"), col("norm").as("norm_a"))
-    val b = banded.select(col("band"), col("band_hash"),
-      col("vec_id").as("vec_b"), col("v").as("vb"), col("norm").as("norm_b"))
-    a.join(b, Seq("band", "band_hash"))
-      .where(col("vec_a") < col("vec_b"))
+    val banded = e.withColumn("bits", expr(s"graft_sign_bits(v, $planes)"))
+      .select(col("vec_id"), bandKeys)
+    Lsh.bucketPairs(banded, "vec_id", Some(maxBucket))
+      .join(e.select(col("vec_id").as("vec_a"), col("v").as("va"), col("norm").as("norm_a")),
+        "vec_a")
+      .join(e.select(col("vec_id").as("vec_b"), col("v").as("vb"), col("norm").as("norm_b")),
+        "vec_b")
       .withColumn("cos",
         round(expr(dot.format("va", "vb") + " / (norm_a * norm_b)"), 6))
       .where(col("cos") >= threshold)
       .select("vec_a", "vec_b", "cos")
-      .dropDuplicates("vec_a", "vec_b")
       .orderBy("vec_a", "vec_b")
   }
 
@@ -583,14 +576,10 @@ object Similarity {
       k: Int = 10,
       planes: Int = 16,
       bands: Int = 4): DataFrame = {
-    require(planes % bands == 0)
-    val r = planes / bands
     val e = prepared(embeddings, "embedding")
       .withColumn("bits", expr(s"graft_sign_bits(v, $planes)"))
     val banded = e.select(col("vec_id"), col("v"), col("norm"),
-      posexplode(expr(
-        s"transform(sequence(0, ${bands - 1}), b -> xxhash64(slice(bits, b * $r + 1, $r)))"))
-        .as(Seq("band", "band_hash")))
+        Lsh.bandKeys("bits", planes, bands))
       // both the query side and the corpus side consume the banded
       // signatures; persist once instead of recomputing the plane dots
       .scopedPersist()

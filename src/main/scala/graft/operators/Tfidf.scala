@@ -325,7 +325,6 @@ object Tfidf {
     keywordsPerDocFromCounts(termCounts(tokenizePortable(docs)).scopedPersist(),
       docs.count(), k)
 
-  /** [[keywordsPerDoc]] over a prebuilt term-counts table + corpus size. */
   /** Top-`k` tf-idf keywords for ONLY the `probes` documents
     * `(q_doc)` → `(q_doc, term)` — the self-retrieval eval's keyword side.
     * Row-identical to [[keywordsPerDocFromCounts]] semi-joined to the
@@ -350,6 +349,7 @@ object Tfidf {
       .select(col("doc_id").as("q_doc"), col("term"))
   }
 
+  /** [[keywordsPerDoc]] over a prebuilt term-counts table + corpus size. */
   def keywordsPerDocFromCounts(tc: DataFrame, totalDocs: Long, k: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("doc_id").orderBy(col("tfidf_r").desc, col("term").asc)
@@ -376,12 +376,8 @@ object Tfidf {
     * Float parity: every constant appears as the same decimal literal and
     * the same parenthesization in the DuckDB oracle, so each engine
     * performs the identical IEEE operation sequence; `ln` outputs round
-    * to 9 before use, the final score rounds to 9. */
-  def bm25(docs: DataFrame, k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25FromCounts(termCounts(tokenizePortable(docs)).scopedPersist(),
-      docs.count(), k1, b)
-
-  /** [[bm25]] over a prebuilt term-counts table + corpus size. */
+    * to 9 before use, the final score rounds to 9. Input: a
+    * [[termCounts]] table and the corpus size `n`. */
   def bm25FromCounts(tc: DataFrame, n: Long, k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
     val totals = docTotals(tc)
@@ -396,13 +392,6 @@ object Tfidf {
         9))
       .select("term", "doc_id", "cnt", "doc_total", "df", "idf_bm25", "score")
   }
-
-  /** BM25 text search: documents ranked by summed BM25 over the query
-    * terms — same consumer shape as [[searchByTerms]] (term-filter
-    * pushdown, narrow per-doc agg, decimal-routed sum, top-k). */
-  def searchByTermsBm25(docs: DataFrame, queryTerms: Seq[String], k: Int = 20): DataFrame =
-    searchByTermsBm25FromCounts(termCounts(tokenizePortable(docs)).scopedPersist(),
-      docs.count(), queryTerms, k)
 
   /** Self-retrieval evaluation — the intrinsic search-quality check a
     * pipeline runs on its index: every probe document queries the corpus
@@ -491,14 +480,10 @@ object Tfidf {
       .orderBy("q_doc")
   }
 
-  /** [[searchByTermsBm25]] over a prebuilt term-counts table + corpus size. */
-  def searchByTermsBm25FromCounts(tc: DataFrame, totalDocs: Long,
-      queryTerms: Seq[String], k: Int = 20): DataFrame =
-    searchByTermsBm25FromScores(bm25FromCounts(tc, totalDocs), queryTerms, k)
-
-  /** [[searchByTermsBm25]] over a PREBUILT BM25 score table — the serving
+  /** BM25 text search over a PREBUILT BM25 score table ([[bm25FromCounts]]):
+    * documents ranked by summed BM25 over the query terms — the serving
     * path of a stored inverted index: the term filter prunes the asset
-    * scan, the per-doc agg is narrow, top-k heaps. */
+    * scan, the per-doc agg is narrow (decimal-routed sum), top-k heaps. */
   def searchByTermsBm25FromScores(scores: DataFrame,
       queryTerms: Seq[String], k: Int = 20): DataFrame =
     topKByValue(
@@ -510,18 +495,14 @@ object Tfidf {
         .select("doc_id", "n_hits", "score"),
       "score", k, Seq("doc_id"))
 
-  /** TF-IDF text search: rank documents by summed tf·idf over the query's
-    * terms — the canonical CONSUMER of the reference's output (what its
-    * ranked word|file table exists to serve). Scale shape: the term filter
+  /** TF-IDF text search over a prebuilt term-counts table + corpus size:
+    * rank documents by summed tf·idf over the query's terms — the
+    * canonical CONSUMER of the reference's output (what its ranked
+    * word|file table exists to serve). Scale shape: the term filter
     * prunes the scored table to query-term rows only (predicate pushdown
     * into the aggregation's input), one narrow per-doc agg, top-k as
     * TakeOrderedAndProject. The per-doc sum is decimal-routed over rounded
     * tfidf values so ranking is engine-exact and merge-order-free. */
-  def searchByTerms(docs: DataFrame, queryTerms: Seq[String], k: Int = 20): DataFrame =
-    searchByTermsFromCounts(termCounts(tokenizePortable(docs)).scopedPersist(),
-      docs.count(), queryTerms, k)
-
-  /** [[searchByTerms]] over a prebuilt term-counts table + corpus size. */
   def searchByTermsFromCounts(tc: DataFrame, totalDocs: Long,
       queryTerms: Seq[String], k: Int = 20): DataFrame = {
     val scored = pipelineFromCounts(tc, totalDocs)

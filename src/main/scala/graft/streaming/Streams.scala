@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.operators.{Curation, Dedup, GraftPersistable, TextAnalysis, Tfidf}
+import graft.operators.{Curation, Dedup, GraftPersistable, Lsh, TextAnalysis, Tfidf}
 
 /** Structured Streaming operators over the event stream. Each takes a
   * DataFrame that may be batch (`spark.read`) or streaming
@@ -664,8 +664,7 @@ object Streams {
       idleTimeout: String = "1 hour"): Dataset[NearDupHit] = {
     import docs.sparkSession.implicits._
     val sigs = Dedup.minhashSigs(docs, k, shingleLen)
-      .select(col("doc_id"), col("sig"),
-        Dedup.bandHashes(k, bands).as(Seq("band", "band_hash")))
+      .select(col("doc_id"), col("sig"), Lsh.bandKeys("sig", k, bands))
       .as[DocBandSig]
     sigs
       .groupByKey(s => (s.band, s.band_hash))
@@ -676,36 +675,48 @@ object Streams {
             state.remove()
             Iterator.empty
           } else {
-            var stored = state.getOption.getOrElse(Nil)
-            val hits = List.newBuilder[NearDupHit]
-            // deterministic order within the micro-batch
-            batch.toSeq.sortBy(_.doc_id).foreach { d =>
-              if (!stored.exists(_._1 == d.doc_id)) {
-                stored.foreach { case (earlierId, earlierSig) =>
-                  val est = graft.functions.MinHash.estimate(
-                    earlierSig.toSeq, d.sig.toSeq)
-                  if (est >= threshold)
-                    hits += NearDupHit(d.doc_id, earlierId, key._1, est)
-                }
-                if (stored.size < maxBucket) stored = stored :+ (d.doc_id -> d.sig)
-              }
-            }
+            val (stored, hits) = probeStore(key._1, batch.map(d => d.doc_id -> d.sig).toSeq,
+              state.getOption.getOrElse(Nil), threshold, maxBucket)
             state.update(stored)
             state.setTimeoutDuration(idleTimeout)
-            hits.result().iterator
+            hits.iterator
           }
         })
   }
 
+  /** One micro-batch of one near-dup store bucket, shared by
+    * [[streamingNearDups]] and [[streamingNearDupsEventTime]]: arrivals in
+    * `doc_id` order (deterministic within the micro-batch); an id already
+    * stored is skipped; every other arrival is estimated against each
+    * stored member, emits a hit at Jaccard ≥ `threshold`, and is appended
+    * while the store holds fewer than `maxBucket` signatures
+    * (keep-earliest). Returns the new store and the hits. */
+  private def probeStore(band: Int, arrivals: Seq[(Long, Array[Long])],
+      stored: List[(Long, Array[Long])], threshold: Double,
+      maxBucket: Int): (List[(Long, Array[Long])], List[NearDupHit]) = {
+    var store = stored
+    val hits = List.newBuilder[NearDupHit]
+    arrivals.sortBy(_._1).foreach { case (id, sig) =>
+      if (!store.exists(_._1 == id)) {
+        store.foreach { case (earlierId, earlierSig) =>
+          val est = graft.functions.MinHash.estimate(earlierSig.toSeq, sig.toSeq)
+          if (est >= threshold) hits += NearDupHit(id, earlierId, band, est)
+        }
+        if (store.size < maxBucket) store = store :+ (id -> sig)
+      }
+    }
+    (store, hits.result())
+  }
+
   /** The near-dup store's BATCH spelling — the scale-safe shape for a
     * full-corpus run of [[streamingNearDups]]'s semantics: the "stored"
-    * side of every bucket is elected by a spillable sort-based
-    * `row_number` window (first `maxBucket` docs per (band, band_hash),
-    * the store's deterministic keep-earliest policy), and each banded
-    * row joins against its bucket's stored members with smaller doc_id —
-    * never more than `maxBucket` candidates per occurrence, LINEAR in
-    * bucket size with a constant cap, where the stateful op in batch
-    * mode buffers the whole bucket's rows in one executor heap.
+    * side of every bucket is [[graft.operators.Lsh.capBuckets]] (first
+    * `maxBucket` docs per (band, band_hash), the store's deterministic
+    * keep-earliest policy), and each banded row joins against its
+    * bucket's stored members with smaller doc_id — never more than
+    * `maxBucket` candidates per occurrence, LINEAR in bucket size with a
+    * constant cap, where the stateful op in batch mode buffers the whole
+    * bucket's rows in one executor heap.
     *
     * The join/window/rejoin all move NARROW (id, band, hash) rows — the
     * k-long signature arrays rejoin only after banding (the
@@ -721,16 +732,12 @@ object Streams {
       bands: Int = 8,
       threshold: Double = 0.7,
       maxBucket: Int = 64): DataFrame = {
-    val bandKeys = Dedup.bandHashes(k, bands)
+    val bandKeys = Lsh.bandKeys("sig", k, bands)
     // signatures feed the banding and both est-side rejoins — persist or
     // Catalyst recomputes the per-row MinHash scan three times
     val sigs = Dedup.minhashSigs(docs, k, shingleLen).scopedPersist()
-    val banded = sigs.select(col("doc_id"), bandKeys.as(Seq("band", "band_hash")))
-    val stored = banded
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("band", "band_hash").orderBy("doc_id")))
-      .where(col("rn") <= maxBucket)
+    val banded = sigs.select(col("doc_id"), bandKeys)
+    val stored = Lsh.capBuckets(banded, "doc_id", maxBucket)
       .select(col("band"), col("band_hash"), col("doc_id").as("dup_of"))
     stored
       .join(banded, Seq("band", "band_hash"))
@@ -773,11 +780,11 @@ object Streams {
       threshold: Double = 0.7,
       watermarkDelay: String = "10 minutes",
       horizon: String = "1 hour"): DataFrame = {
-    val bandKeys = Dedup.bandHashes(k, bands)
+    val bandKeys = Lsh.bandKeys("sig", k, bands)
     def side(suffix: String): DataFrame =
       Dedup.minhashSigs(docs, k, shingleLen, Seq("doc_id", "ts"))
-        .select(col("doc_id").as(s"doc_$suffix"), col("ts").as(s"ts_$suffix"),
-          col("sig").as(s"sig_$suffix"), bandKeys.as(Seq(s"band_$suffix", s"hash_$suffix")))
+        .select(col("doc_id"), col("ts"), col("sig"), bandKeys)
+        .toDF(s"doc_$suffix", s"ts_$suffix", s"sig_$suffix", s"band_$suffix", s"hash_$suffix")
         .withWatermark(s"ts_$suffix", watermarkDelay)
     side("a").join(side("b"),
         col("band_a") === col("band_b") && col("hash_a") === col("hash_b") &&
@@ -811,11 +818,12 @@ object Streams {
       maxBucket: Int = 64,
       watermarkDelay: String = "10 minutes",
       stateHorizon: String = "1 hour"): Dataset[NearDupHit] = {
+    require(docs.isStreaming, "streamingNearDupsEventTime needs a streaming DataFrame " +
+      "(its buckets expire on the watermark); for a batch frame use Streams.nearDupsBatch")
     import docs.sparkSession.implicits._
     val sigs = Dedup.minhashSigs(docs.withWatermark("ts", watermarkDelay), k, shingleLen,
         Seq("doc_id", "ts"))
-      .select(col("doc_id"), col("sig"),
-        Dedup.bandHashes(k, bands).as(Seq("band", "band_hash")), col("ts"))
+      .select(col("doc_id"), col("sig"), Lsh.bandKeys("sig", k, bands), col("ts"))
       .as[DocBandSigTs]
     sigs
       .groupByKey(s => (s.band, s.band_hash))
@@ -826,31 +834,21 @@ object Streams {
             state.remove()
             Iterator.empty
           } else {
-            var (maxSeenTs, stored) = state.getOption.getOrElse((Long.MinValue, Nil))
-            val hits = List.newBuilder[NearDupHit]
-            val rows = batch.toSeq.sortBy(_.doc_id)
-            rows.foreach { d =>
-              if (!stored.exists(_._1 == d.doc_id)) {
-                stored.foreach { case (earlierId, earlierSig) =>
-                  val est = graft.functions.MinHash.estimate(
-                    earlierSig.toSeq, d.sig.toSeq)
-                  if (est >= threshold)
-                    hits += NearDupHit(d.doc_id, earlierId, key._1, est)
-                }
-                if (stored.size < maxBucket) stored = stored :+ (d.doc_id -> d.sig)
-              }
-            }
+            val (lastMaxTs, lastStored) = state.getOption.getOrElse((Long.MinValue, Nil))
+            val rows = batch.toSeq
+            val (stored, hits) = probeStore(key._1, rows.map(d => d.doc_id -> d.sig),
+              lastStored, threshold, maxBucket)
             // expire when the WATERMARK (stream time) passes the bucket's
             // latest activity + horizon — wall clock plays no part. The
             // deadline base is monotone (max event time EVER seen, carried
             // in state, never a batch-local max: a late-but-accepted batch
             // must not pull the deadline backward) and clamped to the
             // current watermark (a base at-or-below it would be rejected).
-            maxSeenTs = math.max(maxSeenTs, rows.map(_.ts.getTime).max)
+            val maxSeenTs = math.max(lastMaxTs, rows.map(_.ts.getTime).max)
             state.update((maxSeenTs, stored))
             state.setTimeoutTimestamp(
               math.max(maxSeenTs, state.getCurrentWatermarkMs() + 1), stateHorizon)
-            hits.result().iterator
+            hits.iterator
           }
         })
   }

@@ -620,6 +620,13 @@ class StreamingSpec extends SparkSpec {
     assert(batch == Set((1L, 2L)), s"batch got $batch")
   }
 
+  test("event-time near-dup store rejects a batch frame up front, naming nearDupsBatch") {
+    val docs = Seq((1L, ts(0), "the quick brown fox")).toDF("doc_id", "ts", "text")
+    val e = intercept[IllegalArgumentException](Streams.streamingNearDupsEventTime(docs))
+    assert(e.getMessage.contains("streaming DataFrame") &&
+      e.getMessage.contains("nearDupsBatch"), e.getMessage)
+  }
+
   test("event-time near-dup store: in-horizon hits, eviction driven by stream time") {
     // EventTimeTimeout is watermark-driven, so unlike the processing-time
     // variant this IS MemoryStream-testable: no wall clock is involved —

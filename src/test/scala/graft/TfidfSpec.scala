@@ -252,7 +252,8 @@ class TfidfSpec extends SparkSpec {
   test("bm25: hand-computed micro corpus, rarer term outranks") {
     // N=2, doc 1 = [aa aa bb] (len 3), doc 2 = [aa cc] (len 2), avgdl = 2.5
     val docs = Seq((1L, "aa aa bb"), (2L, "aa cc")).toDF("doc_id", "text")
-    val out = Tfidf.bm25(docs).select("term", "doc_id", "score")
+    val out = Tfidf.bm25FromCounts(Tfidf.termCounts(Tfidf.tokenizePortable(docs)), docs.count())
+      .select("term", "doc_id", "score")
       .as[(String, Long, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
     val idfA = math.rint(math.log((2.0 - 2 + 0.5) / (2 + 0.5) + 1.0) * 1e9) / 1e9
     val expA1 = math.rint(idfA * (2 * (1.2 + 1.0)) /
